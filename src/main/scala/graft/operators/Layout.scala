@@ -114,7 +114,7 @@ object Layout {
     * count it reads).
     *
     * A manifest-managed [[graft.streaming.UpsertSink]] snapshot (a
-    * `_CURRENT` pointer at the root) routes to
+    * `_manifest` dir holding the versioned pointer) routes to
     * [[graft.streaming.UpsertSink.compactSnapshot]] instead: its
     * bucket deltas compact into a NEW delta dir committed by the
     * sink's atomic manifest swap, so concurrent readers never see the
@@ -183,10 +183,8 @@ object Layout {
     // a sink-managed snapshot compacts through its manifest swap — the
     // in-place rename swap below would expose readers to transiently
     // doubled rows, and its renamed files would dodge the manifest.
-    // Detection covers both pointer generations: the versioned-pointer
-    // `_manifest` dir and the legacy single-file `_CURRENT`.
-    if (fs.exists(new org.apache.hadoop.fs.Path(root, "_manifest")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(root, "_CURRENT"))) {
+    // Detection: the `_manifest` dir that holds the versioned pointer.
+    if (fs.exists(new org.apache.hadoop.fs.Path(root, "_manifest"))) {
       // fail loudly rather than silently ignore tuning that does not
       // apply to the sink path (one file per bucket; stats count delta
       // dirs) — a caller that dialed targetBytes/parallelism is asking
@@ -611,8 +609,9 @@ object Layout {
     * aggregate-then-full-outer-join form paid three — the change
     * groupBy, the snapshot's join shuffle, and the sort-merge join);
     * at 100 TB the snapshot side is the only heavy flow and it now
-    * crosses the network once. Requires at most one snapshot row per
-    * non-null key (the snapshot contract).
+    * crosses the network once. The snapshot must hold at most one row
+    * per key (the snapshot contract); a key with two snapshot rows fails
+    * loudly in the merge job instead of silently collapsing them.
     */
   def mergeChanges(snapshot: DataFrame, changes: DataFrame, key: String,
                    seqCol: String, opCol: String,
@@ -634,8 +633,8 @@ object Layout {
     * winner groupBy, the snapshot's join shuffle, and the join itself
     * are gone; partial aggregation still ships one candidate per key per
     * map task). Requires the snapshot to be a KEYED snapshot — at most
-    * one row per non-null key (the store contract; a duplicate- or
-    * null-keyed "snapshot" is not a snapshot). */
+    * one row per key (the store contract, enforced in [[mergeWinners]];
+    * a duplicate-keyed "snapshot" is not a snapshot). */
   private[graft] def mergeCandidates(snapshot: DataFrame, changes: DataFrame,
                                      key: String, seqCol: String,
                                      opCol: String,
@@ -643,9 +642,9 @@ object Layout {
     require(payloadCols.nonEmpty, "payloadCols must be non-empty")
     require(!payloadCols.contains(key), "payloadCols must not repeat the key")
     val reserved = (Seq(key, seqCol, opCol) ++ payloadCols)
-      .filter(c => c == "__chg" || c == "__cand" || c == "__w")
+      .filter(Set("__chg", "__cand", "__w", "__snaps"))
     require(reserved.isEmpty,
-      s"mergeChanges reserves __chg/__cand/__w: ${reserved.mkString(", ")}")
+      s"mergeChanges reserves __chg/__cand/__w/__snaps: ${reserved.mkString(", ")}")
     val missing = (Seq(key, seqCol, opCol) ++ payloadCols)
       .filterNot(changes.columns.contains)
     require(missing.isEmpty, s"changes is missing columns: ${missing.mkString(", ")}")
@@ -686,13 +685,20 @@ object Layout {
     * projected to `prefixCols ++ key ++ payloads`. `grouped` must group
     * a [[mergeCandidates]] frame by `key` (plus any prefix columns that
     * are functions of the key — how the sink keeps its bucket routing
-    * clustered through the aggregation). */
+    * clustered through the aggregation). The ONE place the snapshot
+    * contract is enforced: the same aggregate counts each group's
+    * snapshot candidates (`__chg = 0`), and a second one raises — `max`
+    * alone would silently keep one of the duplicates. */
   private[graft] def mergeWinners(
       grouped: org.apache.spark.sql.RelationalGroupedDataset, key: String,
       opCol: String, payloadCols: Seq[String],
       prefixCols: Seq[String] = Nil): DataFrame =
-    grouped.agg(max(col("__cand")).as("__w"))
-      .where(col("__w.__chg") === 0 || col(s"__w.$opCol") =!= "D")
+    grouped.agg(max(col("__cand")).as("__w"),
+        count(when(col("__cand.__chg") === 0, lit(1))).as("__snaps"))
+      .where(when(col("__snaps") > 1,
+          raise_error(concat(lit("mergeChanges: more than one snapshot row for " +
+            s"$key="), coalesce(col(key).cast("string"), lit("NULL")))))
+        .otherwise(col("__w.__chg") === 0 || col(s"__w.$opCol") =!= "D"))
       .select(prefixCols.map(col) ++ (col(key) +:
         payloadCols.map(c => col(s"__w.$c").as(c))): _*)
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.operators.Layout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -29,13 +30,12 @@ import java.nio.charset.StandardCharsets
   * Disk layout: `path/delta/b<batchId>/__bucket=<k>/…` immutable bucket
   * dirs; `path/_manifest/m<batchId>.json` mapping every bucket to the
   * delta dir currently holding it; `path/_manifest/_ptr.v<n>` →
-  * manifest name — the CURRENT pointer is the highest version, each
-  * committed by a plain rename-without-overwrite (atomic on every
-  * FileSystem; readers see the old or the new manifest, never a mix
-  * and never a missing pointer — see [[writeManifest]]). A legacy
-  * single-file `path/_CURRENT` still reads as a fallback. Superseded
-  * delta dirs stay on disk until [[vacuum]] drops them (they are what
-  * makes the swap safe for in-flight readers).
+  * manifest name — the versioned pointer, whose highest version is
+  * current, each committed by a plain rename-without-overwrite (atomic
+  * on every FileSystem; readers see the old or the new manifest, never
+  * a mix and never a missing pointer — see [[writeManifest]]).
+  * Superseded delta dirs stay on disk until [[vacuum]] drops them (they
+  * are what makes the swap safe for in-flight readers).
   *
   * ALL paths resolve through the Hadoop FileSystem API — local disk,
   * HDFS, or any object store the session's Hadoop configuration knows;
@@ -83,12 +83,6 @@ object UpsertSink {
     * silently corrupt the snapshot (missed deletes, duplicate keys).
     * [[applyBatch]] therefore fails fast on any layout mismatch.
     *
-    * A LEGACY manifest (written before the contract fields existed)
-    * reads back with `numBuckets = -1` and empty `key`/`schemaDdl`:
-    * the snapshot stays readable, the layout checks are skipped for
-    * that one apply (nothing recorded to check against), and the next
-    * successful apply rewrites the manifest with the full contract.
-    *
     * `sortBy` is the recorded WITHIN-BUCKET sort (the second
     * data-skipping dimension: hash buckets route key equality, parquet
     * row-group min/max stats on a sorted column prune RANGES — which
@@ -101,9 +95,9 @@ object UpsertSink {
     * property rather than a constraint. */
   case class Manifest(batchId: Long, numBuckets: Int, key: String,
                       schemaDdl: String, buckets: Map[Int, String],
-                      sortBy: Seq[String] = Nil,
-                      bloomKey: Boolean = false) {
-    def hasLayout: Boolean = numBuckets > 0
+                      sortBy: Seq[String], bloomKey: Boolean) {
+    def schema: StructType = StructType.fromDDL(schemaDdl)
+    def keyType: DataType = schema(key).dataType
   }
 
   // ---- Hadoop-FS metadata IO ------------------------------------------
@@ -118,35 +112,23 @@ object UpsertSink {
 
   private def manifestDir(path: String) =
     new org.apache.hadoop.fs.Path(path, "_manifest")
-  /** Legacy single-file pointer (pre versioned pointers); still READ as
-    * a fallback so old stores open, never written anymore. */
-  private def legacyPtr(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_CURRENT")
 
   private def ptrSeq(name: String): Option[Long] =
     if (name.startsWith("_ptr.v")) name.stripPrefix("_ptr.v").toLongOption
     else None
 
-  /** Resolves the current pointer: the HIGHEST-versioned
-    * `_manifest/_ptr.v<n>` file (each committed by a plain
-    * rename-without-overwrite — atomic on every FileSystem; see
-    * [[writeManifest]] for why rename-with-OVERWRITE is not), falling
-    * back to the legacy `_CURRENT` file for pre-upgrade stores.
-    * Returns (pointerSeq, manifestName); seq -1 marks the legacy path. */
-  private def currentPointer(path: String): Option[(Long, String)] = {
+  /** Resolves the versioned pointer to the current manifest's name: the
+    * HIGHEST-versioned `_manifest/_ptr.v<n>` file (each committed by a
+    * plain rename-without-overwrite — atomic on every FileSystem; see
+    * [[writeManifest]] for why rename-with-OVERWRITE is not). */
+  private def currentPointer(path: String): Option[String] = {
     val mdir = manifestDir(path)
     val f = fsOf(mdir)
     val vs =
       if (!counted(f.exists(mdir))) Array.empty[(Long, org.apache.hadoop.fs.Path)]
       else counted(f.listStatus(mdir)).filter(_.isFile)
         .flatMap(e => ptrSeq(e.getPath.getName).map(_ -> e.getPath))
-    if (vs.nonEmpty) {
-      val (seq, p) = vs.maxBy(_._1)
-      Some(seq -> readText(f, p).trim)
-    } else {
-      val ptr = legacyPtr(path)
-      if (counted(f.exists(ptr))) Some(-1L -> readText(f, ptr).trim) else None
-    }
+    vs.maxByOption(_._1).map { case (_, p) => readText(f, p).trim }
   }
 
   private def readText(f: org.apache.hadoop.fs.FileSystem,
@@ -178,56 +160,53 @@ object UpsertSink {
     val missing = (key +: payloadCols).filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"changes is missing columns: ${missing.mkString(", ")}")
-    org.apache.spark.sql.types.StructType(
-      (key +: payloadCols).map(c =>
-        org.apache.spark.sql.types.StructField(c, df.schema(c).dataType)))
-      .toDDL
+    StructType((key +: payloadCols).map(c =>
+      StructField(c, df.schema(c).dataType))).toDDL
   }
 
   /** The current manifest, or None before the first applied batch. */
   def readManifest(path: String): Option[Manifest] =
-    currentPointer(path).map { case (_, name) => readManifestFile(path, name) }
+    currentPointer(path).map(readManifestFile(path, _))
+
+  /** The current manifest; fails before the first applied batch. */
+  private def currentManifest(path: String): Manifest =
+    readManifest(path).getOrElse(
+      throw new IllegalStateException(s"no snapshot at $path yet"))
 
   private def readManifestFile(path: String, name: String): Manifest = {
     val f = fsOf(manifestDir(path))
     val txt = readText(f,
       new org.apache.hadoop.fs.Path(manifestDir(path), name))
-    // flat hand-rolled JSON:
+    // flat hand-rolled JSON, every field required:
     // {"batchId":N,"numBuckets":K,"key":"id","schema":"id BIGINT,…",
-    //  "buckets":{"0":"delta/b0",…}}
+    //  "sortBy":[…],"bloomKey":B,"buckets":{"0":"delta/b0",…}}
     def fail() = sys.error(s"malformed manifest $name")
-    val id = """"batchId"\s*:\s*(-?\d+)""".r.findFirstMatchIn(txt)
-      .getOrElse(fail()).group(1).toLong
-    // layout-contract fields are OPTIONAL on read: a pre-contract
-    // manifest is legacy, not malformed
-    val nb = """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(-1)
-    val key = """"key"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-    val ddl = """"schema"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1)).getOrElse("")
-    // bucket pairs parse only inside the TRAILING "buckets" object
-    // (lastIndexOf: the writer emits it last, so an escaped "buckets"
-    // inside a pathological key/schema value cannot shadow it), so a
-    // numeric-looking column name in the schema can't collide either
-    val bucketsTxt = txt.substring(txt.lastIndexOf("\"buckets\""))
-    val pairs = """"(\d+)"\s*:\s*"([^"]*)"""".r.findAllMatchIn(bucketsTxt)
+    val bucketsAt = txt.lastIndexOf("\"buckets\"")
+    if (bucketsAt < 0) fail()
+    // scalar fields parse from the PRE-buckets text so a bucket path
+    // can't shadow them; bucket pairs parse only inside the TRAILING
+    // "buckets" object (lastIndexOf: the writer emits it last, so an
+    // escaped "buckets" inside a pathological key/schema value cannot
+    // shadow it), so a numeric-looking column name can't collide either
+    val headTxt = txt.substring(0, bucketsAt)
+    def field(re: String): String =
+      re.r.findFirstMatchIn(headTxt).getOrElse(fail()).group(1)
+    val quoted = """\s*:\s*"((?:[^"\\]|\\.)*)""""
+    val pairs = """"(\d+)"\s*:\s*"([^"]*)"""".r
+      .findAllMatchIn(txt.substring(bucketsAt))
       .map(m => m.group(1).toInt -> m.group(2)).toMap
-    // optional (absent on pre-sortBy manifests → Nil); parsed from the
-    // PRE-buckets text so a bucket path can't shadow it
-    val headTxt = txt.substring(0, txt.lastIndexOf("\"buckets\""))
-    val sortBy = """"sortBy"\s*:\s*\[((?:[^\]\\]|\\.)*)\]""".r
-      .findFirstMatchIn(headTxt).map(_.group(1)).toSeq.flatMap(inner =>
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(inner)
-          .map(m => jsonUnescape(m.group(1))))
-    val bloom = """"bloomKey"\s*:\s*(true|false)""".r
-      .findFirstMatchIn(headTxt).exists(_.group(1) == "true")
-    Manifest(id, nb, jsonUnescape(key), jsonUnescape(ddl), pairs, sortBy,
-      bloom)
+    val sortBy = """"((?:[^"\\]|\\.)*)"""".r
+      .findAllMatchIn(field(""""sortBy"\s*:\s*\[((?:[^\]\\]|\\.)*)\]"""))
+      .map(m => jsonUnescape(m.group(1))).toSeq
+    Manifest(field(""""batchId"\s*:\s*(-?\d+)""").toLong,
+      field(""""numBuckets"\s*:\s*(\d+)""").toInt,
+      jsonUnescape(field("\"key\"" + quoted)),
+      jsonUnescape(field("\"schema\"" + quoted)), pairs, sortBy,
+      field(""""bloomKey"\s*:\s*(true|false)""") == "true")
   }
 
-  /** Writes manifest `name` and atomically swaps `_CURRENT` to it.
-    * Names encode the batchId (`m<id>.json` for applies,
+  /** Writes manifest `name` and atomically swaps the versioned pointer
+    * to it. Names encode the batchId (`m<id>.json` for applies,
     * `m<id>.c<nonce>.json` for compactions — same id: a compaction
     * changes layout, never state), which is what [[vacuum]]'s
     * strictly-older guard parses. */
@@ -246,7 +225,7 @@ object UpsertSink {
     writeText(f, new org.apache.hadoop.fs.Path(mdir, name), body)
     // pointer swap: a NEW `_ptr.v<n>` file committed by a plain
     // rename-WITHOUT-overwrite — the primitive that is atomic on every
-    // FileSystem. The previous design renamed OVER a single `_CURRENT`
+    // FileSystem. The previous design renamed OVER a single pointer file
     // with Options.Rename.OVERWRITE, which is atomic on HDFS but the
     // local AbstractFileSystem implements it as delete-then-rename: the
     // concurrent-reads spec caught a reader observing NO pointer at all
@@ -350,18 +329,12 @@ object UpsertSink {
   private def readBuckets(spark: SparkSession, path: String,
                           entries: Seq[(Int, String)],
                           keepBucket: Boolean,
-                          conformTo: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] =
+                          conformTo: StructType): Option[DataFrame] =
     entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, bs) =>
       val df = spark.read.option("basePath", s"$path/$d")
         .parquet(bs.map(_._1).sorted.map(b => bucketDir(path, d, b)): _*)
-      val conformed = conformTo match {
-        case None => df
-        case Some(schema) =>
-          val extra = if (keepBucket) Seq(col(BucketCol)) else Nil
-          df.select(conformCols(df, schema) ++ extra: _*)
-      }
-      if (keepBucket) conformed else conformed.drop(BucketCol)
+      val extra = if (keepBucket) Seq(col(BucketCol)) else Nil
+      df.select(conformCols(df, conformTo) ++ extra: _*)
     }.reduceOption(_ unionByName _)
 
   /** The conform-to-schema projection the sink's readers share: each
@@ -369,8 +342,7 @@ object UpsertSink {
     * predates it (additive evolution), extras dropped. ONE definition —
     * the batch readers ([[readBuckets]]) and the streaming source's
     * declared-schema guard must never diverge. */
-  private[streaming] def conformCols(df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType)
+  private[streaming] def conformCols(df: DataFrame, schema: StructType)
       : Seq[org.apache.spark.sql.Column] = {
     val have = df.columns.toSet
     schema.fields.toSeq.map(f =>
@@ -392,23 +364,7 @@ object UpsertSink {
     * the schema rides in the manifest, so downstream selects of the
     * key/payload columns keep resolving. */
   def readSnapshot(spark: SparkSession, path: String): DataFrame =
-    snapshotOf(spark, path, readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet")))
-
-  /** The current manifest with a FULL layout contract, for the pruned
-    * reads: a legacy manifest records neither bucket count nor key
-    * type, so there is nothing to route probes with. */
-  private def layoutManifest(path: String): Manifest = {
-    val m = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
-    require(m.hasLayout,
-      s"snapshot at $path has a legacy manifest with no recorded layout; " +
-        "apply a batch to upgrade it before key-pruned reads")
-    m
-  }
-
-  private def keyTypeOf(m: Manifest): org.apache.spark.sql.types.DataType =
-    org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)(m.key).dataType
+    scanBuckets(spark, path, currentManifest(path), None)
 
   /** Union-read of just the buckets in `wanted`, conformed to
     * `conformTo` (typed NULLs for columns an older dir predates); a
@@ -416,12 +372,11 @@ object UpsertSink {
     * there, or deleted empty) still returns a correctly-typed empty
     * frame. */
   private def prunedRead(spark: SparkSession, path: String, m: Manifest,
-                         wanted: Set[Int],
-                         conformTo: org.apache.spark.sql.types.StructType)
+                         wanted: Set[Int], conformTo: StructType)
       : DataFrame =
     readBuckets(spark, path,
         m.buckets.toSeq.filter { case (b, _) => wanted(b) },
-        keepBucket = false, conformTo = Some(conformTo))
+        keepBucket = false, conformTo)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], conformTo))
 
@@ -446,12 +401,10 @@ object UpsertSink {
   def readSnapshotKeys(spark: SparkSession, path: String,
                        keys: Seq[Any]): DataFrame = {
     require(keys.nonEmpty, "readSnapshotKeys: keys must be non-empty")
-    val m = layoutManifest(path)
-    val keyType = keyTypeOf(m)
-    val keyLits = keys.map(k => lit(k).cast(keyType))
+    val m = currentManifest(path)
+    val keyLits = keys.map(k => lit(k).cast(m.keyType))
     val wanted = keys.map(k => bucketOfLiteral(m, k)).toSet
-    prunedRead(spark, path, m, wanted,
-        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
+    prunedRead(spark, path, m, wanted, m.schema)
       .filter(col(m.key).isInCollection(keyLits))
   }
 
@@ -466,29 +419,20 @@ object UpsertSink {
     * different bucket than the writer used. */
   private[graft] def bucketOfLiteral(m: Manifest, k: Any): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
-    val cast = Cast(Literal(k), keyTypeOf(m), Some("UTC"))
+    val cast = Cast(Literal(k), m.keyType, Some("UTC"))
     Pmod(new XxHash64(Seq(cast)), Literal(m.numBuckets.toLong))
       .eval().asInstanceOf[Long].toInt
   }
 
-  /** The layout-bearing manifest a table scan binds to: the CURRENT one,
+  /** The manifest a table scan binds to: the CURRENT one,
     * or — `versionAsOf` — the [[readSnapshotAt]] selection (largest
     * committed id ≤ the ask). Bridge for the `graft-snapshot` relation,
     * which needs the manifest ONCE at resolution (schema) and again at
     * scan build (bucket map), under the same rules as every other
     * reader. */
   private[graft] def manifestForScan(path: String,
-                                     versionAsOf: Option[Long]): Manifest = {
-    val m = versionAsOf match {
-      case Some(v) => manifestAtVersion(path, v)
-      case None => readManifest(path).getOrElse(
-        throw new IllegalStateException(s"no snapshot at $path yet"))
-    }
-    require(m.hasLayout,
-      s"snapshot at $path has a legacy manifest with no recorded layout; " +
-        "apply a batch to upgrade it before table scans")
-    m
-  }
+                                     versionAsOf: Option[Long]): Manifest =
+    versionAsOf.fold(currentManifest(path))(manifestAtVersion(path, _))
 
   /** Conformed union read of `m`'s buckets, restricted to `wanted` when
     * given (IO-level pruning; `None` = full snapshot) — the scan half of
@@ -496,11 +440,8 @@ object UpsertSink {
     * same [[readBuckets]]/[[prunedRead]] machinery as every API read. */
   private[graft] def scanBuckets(spark: SparkSession, path: String,
                                  m: Manifest,
-                                 wanted: Option[Set[Int]]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-    prunedRead(spark, path, m,
-      wanted.getOrElse(m.buckets.keySet), schema)
-  }
+                                 wanted: Option[Set[Int]]): DataFrame =
+    prunedRead(spark, path, m, wanted.getOrElse(m.buckets.keySet), m.schema)
 
   /** Bucket-pruned lookup with a DISTRIBUTED probe set: reads only the
     * buckets the probe frame's keys hash to, then left-semi joins the
@@ -527,7 +468,7 @@ object UpsertSink {
   private def readSnapshotKeysImpl(spark: SparkSession, path: String,
                                    keysDf: DataFrame,
                                    preDistinct: Boolean): DataFrame = {
-    val m = layoutManifest(path)
+    val m = currentManifest(path)
     require(keysDf.columns.contains(m.key),
       s"readSnapshotKeys: probe frame has no '${m.key}' column " +
         s"(columns: ${keysDf.columns.mkString(", ")})")
@@ -540,8 +481,8 @@ object UpsertSink {
     // bucket-id collect below is the first action and scans every
     // partition, so it fills the checkpoint in the same job.
     val probes =
-      if (preDistinct) keysDf.select(col(m.key).cast(keyTypeOf(m)))
-      else keysDf.select(col(m.key).cast(keyTypeOf(m))).distinct()
+      if (preDistinct) keysDf.select(col(m.key).cast(m.keyType))
+      else keysDf.select(col(m.key).cast(m.keyType)).distinct()
         .localCheckpoint(false)
     // per-partition distinct sets (≤ numBuckets ints each), no second
     // shuffle — the one job also materializes the probe checkpoint
@@ -552,25 +493,9 @@ object UpsertSink {
         it.foreach(r => if (!r.isNullAt(0)) s.add(r.getInt(0)))
         scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
       }.collect().toSet
-    prunedRead(spark, path, m, wanted,
-        org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
+    prunedRead(spark, path, m, wanted, m.schema)
       .join(probes, Seq(m.key), "left_semi")
   }
-
-  private def snapshotOf(spark: SparkSession, path: String,
-                         m: Manifest): DataFrame =
-    readBuckets(spark, path, m.buckets.toSeq, keepBucket = false,
-        conformTo = if (m.hasLayout)
-          Some(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
-        else None)
-      .getOrElse {
-        if (!m.hasLayout) throw new IllegalStateException(
-          s"snapshot at $path is empty and its legacy manifest records no " +
-            "schema; apply a batch to upgrade it")
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      }
 
   /** Every parseable manifest file on disk as `(id, name)` pairs,
     * sorted by id then name — the ONE place the `m<id>[.c<nonce>].json`
@@ -594,10 +519,9 @@ object UpsertSink {
     * [[vacuum]] has not yet reclaimed (vacuum collapses history to the
     * current snapshot; retention = your vacuum cadence). Sorted
     * ascending. Uncommitted orphans (a manifest written by a crashed
-    * apply that never swapped `_CURRENT`) are excluded. */
+    * apply that never swapped the versioned pointer) are excluded. */
   def snapshotVersions(path: String): Seq[Long] = {
-    val cur = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
+    val cur = currentManifest(path)
     manifestFiles(path).map(_._1).filter(_ <= cur.batchId).distinct.sorted
   }
 
@@ -613,8 +537,7 @@ object UpsertSink {
     * manifest, never a data-file touch. SQL:
     * `SELECT * FROM graft_snapshot_history('/data/store')`. */
   def snapshotHistory(spark: SparkSession, path: String): DataFrame = {
-    val cur = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
+    val cur = currentManifest(path)
     val rows = manifestFiles(path)
       .filter { case (id, _) => id <= cur.batchId }
       .map { case (id, n) =>
@@ -650,15 +573,14 @@ object UpsertSink {
     * whose delta dirs still exist is read. */
   def readSnapshotAt(spark: SparkSession, path: String,
                      batchId: Long): DataFrame =
-    snapshotOf(spark, path, manifestAtVersion(path, batchId))
+    scanBuckets(spark, path, manifestAtVersion(path, batchId), None)
 
   /** The readable manifest for [[readSnapshotAt]]'s version-selection
     * contract (largest committed id ≤ `batchId`, clamped, orphans and
     * vacuumed-away candidates skipped) — factored out so the changefeed
     * ([[readChanges]]) resolves endpoints through the same rules. */
   private def manifestAtVersion(path: String, batchId: Long): Manifest = {
-    val cur = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
+    val cur = currentManifest(path)
     val f = fsOf(manifestDir(path))
     val eligible = manifestFiles(path)
       .filter { case (id, _) => id <= batchId && id <= cur.batchId }
@@ -720,16 +642,13 @@ object UpsertSink {
     val mFrom =
       if (fromVersion < 0) mTo.copy(buckets = Map.empty)
       else manifestAtVersion(path, fromVersion)
-    require(mFrom.hasLayout && mTo.hasLayout,
-      s"snapshot at $path has a legacy manifest with no recorded layout; " +
-        "apply a batch to upgrade it before changefeed reads")
     require(mFrom.key == mTo.key && mFrom.numBuckets == mTo.numBuckets,
       s"layout contract changed between versions $fromVersion and " +
         s"$toVersion — changefeed undefined across a re-bucketing")
     val changed = (mFrom.buckets.keySet ++ mTo.buckets.keySet)
       .filter(b => mFrom.buckets.get(b) != mTo.buckets.get(b))
     val key = mTo.key
-    val toSchema = org.apache.spark.sql.types.StructType.fromDDL(mTo.schemaDdl)
+    val toSchema = mTo.schema
     // `_change_type` is the one name the feed reserves (the Delta CDF
     // spelling, underscored for exactly this reason); a store whose own
     // columns use it would emit duplicate attributes — refuse loudly
@@ -790,14 +709,12 @@ object UpsertSink {
   /** The schema [[readChanges]] emits for the store at `path`: key,
     * `_change_type` STRING, then the payload columns — what a
     * changefeed STREAM declares before any batch runs. */
-  def changeSchema(path: String): org.apache.spark.sql.types.StructType = {
-    val m = layoutManifest(path)
-    val snap = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-    org.apache.spark.sql.types.StructType(
-      snap(m.key) +:
-        org.apache.spark.sql.types.StructField(ChangeTypeCol,
-          org.apache.spark.sql.types.StringType) +:
-        snap.filterNot(_.name == m.key))
+  def changeSchema(path: String): StructType = {
+    val m = currentManifest(path)
+    val snap = m.schema
+    StructType(snap(m.key) +:
+      StructField(ChangeTypeCol, StringType) +:
+      snap.filterNot(_.name == m.key))
   }
 
   /** Apply one CDC micro-batch. Returns true when applied, false when
@@ -839,47 +756,41 @@ object UpsertSink {
       s"sortBy columns not in the snapshot schema: ${badSort.mkString(", ")}")
     val prev = readManifest(path)
     val ddl = snapshotDdl(changes, key, payloadCols)
-    prev.filter(_.hasLayout).foreach { m =>
-      // layout-contract check BEFORE any hashing: a different bucket
-      // count or key/payload type would route keys away from the
-      // buckets their existing versions live in (xxhash64 is
-      // type-sensitive) — corrupting instead of merging. A legacy
-      // manifest recorded nothing to check against; this apply trusts
-      // the caller once and writes the full contract.
-      require(m.numBuckets == numBuckets,
-        s"snapshot at $path is bucketed numBuckets=${m.numBuckets}; " +
-          s"applyBatch called with $numBuckets")
-      require(m.key == key,
-        s"snapshot at $path is keyed on '${m.key}'; applyBatch called " +
-          s"with '$key'")
-      if (m.schemaDdl != ddl) {
-        require(mergeSchema,
-          s"snapshot at $path has schema [${m.schemaDdl}]; this batch " +
-            s"would write [$ddl] (additive widening needs " +
-            "mergeSchema = true)")
-        val old = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-        val neu = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        val dropped = old.map(_.name).filterNot(neu.fieldNames.contains)
-        require(dropped.isEmpty,
-          s"mergeSchema is ADDITIVE only: this batch drops " +
-            s"[${dropped.mkString(", ")}] from [${m.schemaDdl}]")
-        val retyped = old.flatMap(f => neu.find(_.name == f.name)
-          .filter(_.dataType != f.dataType)
-          .map(n => s"${f.name}: ${f.dataType.sql} -> ${n.dataType.sql}"))
-        require(retyped.isEmpty,
-          s"mergeSchema cannot change column types: ${retyped.mkString(", ")}")
-      }
-    }
     // the EFFECTIVE snapshot schema this apply commits: on a widening
     // apply, existing columns keep their order, new ones append — so
     // later applies see a stable DDL regardless of caller column order
-    val effectiveSchema = prev.filter(_.hasLayout) match {
-      case Some(m) if m.schemaDdl != ddl =>
-        val old = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-        val neu = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        org.apache.spark.sql.types.StructType(
-          old ++ neu.filterNot(f => old.fieldNames.contains(f.name)))
-      case _ => org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    val effectiveSchema = prev match {
+      case None => StructType.fromDDL(ddl)
+      case Some(m) =>
+        // layout-contract check BEFORE any hashing: a different bucket
+        // count or key/payload type would route keys away from the
+        // buckets their existing versions live in (xxhash64 is
+        // type-sensitive) — corrupting instead of merging
+        require(m.numBuckets == numBuckets,
+          s"snapshot at $path is bucketed numBuckets=${m.numBuckets}; " +
+            s"applyBatch called with $numBuckets")
+        require(m.key == key,
+          s"snapshot at $path is keyed on '${m.key}'; applyBatch called " +
+            s"with '$key'")
+        if (m.schemaDdl == ddl) m.schema
+        else {
+          require(mergeSchema,
+            s"snapshot at $path has schema [${m.schemaDdl}]; this batch " +
+              s"would write [$ddl] (additive widening needs " +
+              "mergeSchema = true)")
+          val old = m.schema
+          val neu = StructType.fromDDL(ddl)
+          val dropped = old.map(_.name).filterNot(neu.fieldNames.contains)
+          require(dropped.isEmpty,
+            s"mergeSchema is ADDITIVE only: this batch drops " +
+              s"[${dropped.mkString(", ")}] from [${m.schemaDdl}]")
+          val retyped = old.flatMap(f => neu.find(_.name == f.name)
+            .filter(_.dataType != f.dataType)
+            .map(n => s"${f.name}: ${f.dataType.sql} -> ${n.dataType.sql}"))
+          require(retyped.isEmpty,
+            s"mergeSchema cannot change column types: ${retyped.mkString(", ")}")
+          StructType(old ++ neu.filterNot(f => old.fieldNames.contains(f.name)))
+        }
     }
     val effectiveDdl = effectiveSchema.toDDL
     if (prev.exists(_.batchId >= batchId)) return false // replayed batch
@@ -889,8 +800,14 @@ object UpsertSink {
     // only valid inside this call. LAZY: the touched-bucket collect is
     // the first action and scans every partition, so it materializes
     // the checkpoint as a side effect — an eager checkpoint here paid
-    // one extra job per apply for the same bytes
-    val batch = changes.withColumn(BucketCol, bucketOf).localCheckpoint(false)
+    // one extra job per apply for the same bytes. A NULL key fails in
+    // that first job, before anything is written: xxhash64 of NULL is
+    // the seed, so unguarded it would route to a real bucket
+    val batch = changes.withColumn(BucketCol,
+        when(col(key).isNull,
+          raise_error(lit(s"applyBatch: NULL $key in a change row")))
+          .otherwise(bucketOf))
+      .localCheckpoint(false)
     try {
       // the touched-bucket list is ≤ numBuckets ints — driver-safe.
       // Collected as per-partition distinct sets over the internal rows
@@ -901,11 +818,7 @@ object UpsertSink {
       val touched = batch.select(BucketCol).queryExecution.toRdd
         .mapPartitions { it =>
           val s = new java.util.HashSet[Int]()
-          it.foreach { r =>
-            if (r.isNullAt(0)) throw new IllegalArgumentException(
-              s"applyBatch: NULL $key in a change row")
-            s.add(r.getInt(0))
-          }
+          it.foreach(r => s.add(r.getInt(0)))
           scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
         }.collect().distinct.sorted
       if (touched.isEmpty) return false // empty batch
@@ -913,13 +826,9 @@ object UpsertSink {
       val existing = prev.toSeq.flatMap(m => touched.flatMap(b =>
         m.buckets.get(b).map(d => b -> d)))
       // conform the touched snapshot slice to the effective schema (a
-      // widening apply reads pre-evolution buckets with typed NULLs); a
-      // LEGACY manifest recorded no schema to conform to — read raw and
-      // let a true mismatch fail loudly rather than null-fill it
+      // widening apply reads pre-evolution buckets with typed NULLs)
       val snapTouched = readBuckets(spark, path, existing,
-          keepBucket = false,
-          conformTo = if (prev.forall(_.hasLayout)) Some(effectiveSchema)
-            else None).getOrElse {
+          keepBucket = false, effectiveSchema).getOrElse {
         // first batch (or all-new buckets): empty snapshot, batch schema
         batch.select((key +: payloadCols).map(col): _*).limit(0)
       }
@@ -1037,17 +946,11 @@ object UpsertSink {
                       maxDeltaDirs: Int = 1,
                       sortBy: Option[Seq[String]] = None): Layout.CompactStats = {
     require(maxDeltaDirs >= 1, s"maxDeltaDirs must be >= 1, got $maxDeltaDirs")
-    val m0 = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
+    val m0 = currentManifest(path)
     val m = sortBy match {
       case None => m0
       case Some(cols) =>
-        require(m0.hasLayout,
-          s"snapshot at $path has a legacy manifest with no recorded " +
-            "layout; apply a batch to upgrade it before re-clustering")
-        val names = org.apache.spark.sql.types.StructType
-          .fromDDL(m0.schemaDdl).fieldNames
-        val bad = cols.filterNot(names.contains)
+        val bad = cols.filterNot(m0.schema.fieldNames.contains)
         require(bad.isEmpty,
           s"sortBy columns not in the snapshot schema: ${bad.mkString(", ")}")
         m0.copy(sortBy = cols)
@@ -1095,10 +998,7 @@ object UpsertSink {
     // an additive evolution) merge: the rewrite BACKFILLS typed NULLs,
     // upgrading the merged dirs to the current schema
     writeBucketed(
-      readBuckets(spark, path, victims, keepBucket = true,
-        conformTo = if (m.hasLayout)
-          Some(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
-        else None).get,
+      readBuckets(spark, path, victims, keepBucket = true, m.schema).get,
       s"$path/$deltaDir", m.sortBy,
       if (m.bloomKey) Some(m.key) else None)
     // every merged bucket holds ≥1 row (applyBatch drops empty ones), so
@@ -1123,9 +1023,9 @@ object UpsertSink {
 
   /** Reclaims storage the retained snapshots no longer reference: delta
     * directories whose buckets all point elsewhere, and manifest files
-    * below the retention window. The `_CURRENT` swap is what makes
-    * superseded deltas safe to keep for in-flight readers — and this is
-    * the cleanup that eventually drops them. Returns
+    * below the retention window. The versioned-pointer swap is what
+    * makes superseded deltas safe to keep for in-flight readers — and
+    * this is the cleanup that eventually drops them. Returns
     * `(deltaDirsRemoved, manifestsRemoved)`.
     *
     * `retainVersions` is the [[readSnapshotAt]] time-travel retention:
@@ -1133,8 +1033,8 @@ object UpsertSink {
     * reclaims. The default 1 keeps only the CURRENT snapshot (maximum
     * reclamation — history collapses). For a retained id other than the
     * current one, EVERY manifest file of that id keeps its dirs; for
-    * the current id only the `_CURRENT`-named manifest does (a
-    * superseded same-id apply manifest left behind by a compaction
+    * the current id only the manifest the versioned pointer names does
+    * (a superseded same-id apply manifest left behind by a compaction
     * contributes nothing — its b-dirs reclaim now, and a later
     * [[readSnapshotAt]] of that id resolves through the compaction
     * manifest's surviving dirs).
@@ -1147,17 +1047,15 @@ object UpsertSink {
     * (batchIds are monotone; replays return before writing), so vacuum
     * racing a live writer can delete neither the delta the writer is
     * about to commit nor the manifest it has written but not yet
-    * swapped `_CURRENT` to (same-id compaction artifacts are likewise
-    * never candidates). Run it when no READER can still
-    * hold a pre-swap manifest (readers resolve `_CURRENT` at open; a
+    * swapped the versioned pointer to (same-id compaction artifacts are
+    * likewise never candidates). Run it when no READER can still hold a
+    * pre-swap manifest (readers resolve the versioned pointer at open; a
     * grace window of one query lifetime suffices). Idempotent — a
     * second call finds nothing. */
   def vacuum(path: String, retainVersions: Int = 1): (Int, Int) = {
     require(retainVersions >= 1,
       s"retainVersions must be >= 1, got $retainVersions")
-    val (curSeq, currentName) = currentPointer(path).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $path yet"))
-    val m = readManifestFile(path, currentName)
+    val m = currentManifest(path)
     // retained ids: the newest retainVersions committed ids on disk
     val idsOnDisk = manifestFiles(path).filter(_._1 <= m.batchId)
     val retained = idsOnDisk.map(_._1).distinct.sorted.takeRight(retainVersions).toSet
@@ -1165,7 +1063,7 @@ object UpsertSink {
     // every manifest file of that id (an old id's apply and compaction
     // manifests both stay readable inside the window)
     val live = m.buckets.values.toSet ++
-      idsOnDisk.filter { case (id, n) =>
+      idsOnDisk.filter { case (id, _) =>
         id != m.batchId && retained.contains(id) }
         .flatMap { case (_, n) => readManifestFile(path, n).buckets.values }
     val deltaRoot = new org.apache.hadoop.fs.Path(path, "delta")
@@ -1190,26 +1088,20 @@ object UpsertSink {
         dirs += 1
       }
     }
-    var manifests = 0
     val mdir = manifestDir(path)
     // the manifest guard mirrors the delta guard above: delete only ids
     // STRICTLY below the current committed one. An in-flight applyBatch
     // may already have written m<id>.json for a higher id without having
-    // swapped _CURRENT yet — deleting it would leave the pointer dangling
-    // the instant the writer swaps. Unparseable names are left alone.
-    if (f.exists(mdir)) f.listStatus(mdir).foreach { e =>
-      val nm = e.getPath.getName
-      // leading digits cover both m<id>.json and m<id>.c<nonce>.json;
-      // a same-id compaction manifest might be in-flight (see above),
-      // and ids inside the retention window stay time-travel readable
-      val id = if (nm.startsWith("m") && nm.endsWith(".json"))
-        nm.stripPrefix("m").takeWhile(_.isDigit).toLongOption else None
-      if (e.isFile && id.exists(i => i < m.batchId && !retained.contains(i))) {
-        require(f.delete(e.getPath, false),
-          s"vacuum: manifest delete failed: ${e.getPath}")
-        manifests += 1
-      }
+    // swapped the versioned pointer yet — deleting it would leave the
+    // pointer dangling the instant the writer swaps. A same-id
+    // compaction manifest might be in-flight (see above), and ids inside
+    // the retention window stay time-travel readable.
+    val dead = idsOnDisk.collect {
+      case (id, n) if id < m.batchId && !retained.contains(id) =>
+        new org.apache.hadoop.fs.Path(mdir, n)
     }
+    dead.foreach(p =>
+      require(f.delete(p, false), s"vacuum: manifest delete failed: $p"))
     // pointer hygiene: versioned pointer files accrete one per swap —
     // keep the newest TWO so a reader that listed just before a swap can
     // still OPEN the pointer file it picked (everything older is
@@ -1221,26 +1113,19 @@ object UpsertSink {
     // from crashed swaps sweep only past [[TmpPointerGraceMs]] — a young
     // tmp may belong to an in-flight [[writeManifest]] that is about to
     // rename it in, and deleting it would abort that writer's commit.
-    // The shadowed legacy `_CURRENT` drops once v-pointers exist.
-    if (f.exists(mdir)) {
-      val seqs = f.listStatus(mdir).filter(_.isFile)
-        .flatMap(e => ptrSeq(e.getPath.getName)).sorted
-      if (seqs.nonEmpty) {
-        val keep = seqs.takeRight(2).toSet
-        val now = System.currentTimeMillis()
-        f.listStatus(mdir).filter(_.isFile).foreach { e =>
-          val nm = e.getPath.getName
-          val stale = ptrSeq(nm).exists(!keep.contains(_)) ||
-            (nm.startsWith(".ptr.tmp.") && curSeq >= 0 &&
-              now - e.getModificationTime > TmpPointerGraceMs)
-          if (stale) require(f.delete(e.getPath, false),
-            s"vacuum: pointer cleanup failed: ${e.getPath}")
-        }
-        val legacy = legacyPtr(path)
-        if (f.exists(legacy)) f.delete(legacy, false) // best-effort shadow drop
-      }
+    val files = f.listStatus(mdir).filter(_.isFile)
+    val keep = files.flatMap(e => ptrSeq(e.getPath.getName)).sorted
+      .takeRight(2).toSet
+    val now = System.currentTimeMillis()
+    files.foreach { e =>
+      val nm = e.getPath.getName
+      val stale = ptrSeq(nm).exists(!keep.contains(_)) ||
+        (nm.startsWith(".ptr.tmp.") &&
+          now - e.getModificationTime > TmpPointerGraceMs)
+      if (stale) require(f.delete(e.getPath, false),
+        s"vacuum: pointer cleanup failed: ${e.getPath}")
     }
-    (dirs, manifests)
+    (dirs, dead.size)
   }
 
   /** foreachBatch adapter: `changes.writeStream.foreachBatch(

@@ -500,4 +500,19 @@ class LayoutSpec extends SparkTestBase {
     assert(msgs(e).exists(m => m.contains("NULL id")),
       s"expected a NULL-key failure, got: ${msgs(e).mkString(" | ")}")
   }
+
+  test("mergeChanges rejects a snapshot with two rows for one key instead " +
+      "of collapsing them") {
+    // key 1 is duplicated and NOT touched by the changes: the check covers
+    // every snapshot group, not only the ones a change lands in
+    val snap = Seq((1L, "a"), (1L, "a2"), (2L, "b")).toDF("id", "v")
+    val changes = Seq((3L, 1L, "I", "c")).toDF("id", "seq", "op", "v")
+    val e = intercept[Exception] {
+      Layout.mergeChanges(snap, changes, "id", "seq", "op", Seq("v")).collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("more than one snapshot row for id=1")),
+      s"expected a duplicate-key failure, got: ${msgs(e).mkString(" | ")}")
+  }
 }

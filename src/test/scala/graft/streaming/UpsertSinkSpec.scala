@@ -146,33 +146,49 @@ class UpsertSinkSpec extends SparkTestBase {
     assert(snap(path) === Seq((1L, "a2"), (2L, "b")))
   }
 
-  test("a legacy pre-contract manifest reads, applies once unchecked, and " +
-      "upgrades to the full contract on that apply") {
+  test("a manifest missing a layout field fails as malformed on every " +
+      "read and apply path") {
     val path = tmp()
     assert(apply(path, Seq((1L, 1L, "I", "a")), 0))
-    // rewrite the current manifest in the OLD format (batchId + buckets
-    // only) — what a pre-upgrade sink version left on disk
-    val m = UpsertSink.readManifest(path).get
-    val legacy = s"""{"batchId":${m.batchId},"buckets":{""" +
-      m.buckets.toSeq.sortBy(_._1)
-        .map { case (b, d) => s""""$b":"$d"""" }.mkString(",") + "}}"
+    // strip the layout contract from the current manifest, as a truncated
+    // or hand-edited file would; manifests are disk input, so this must
+    // fail loudly rather than read with guessed routing
     val mdir = java.nio.file.Paths.get(path, "_manifest")
-    java.nio.file.Files.write(mdir.resolve(s"m${m.batchId}.json"),
-      legacy.getBytes("UTF-8"))
-    // the raw rewrite bypasses Hadoop's LocalFileSystem, whose checksum
-    // sidecar still describes the ORIGINAL bytes — drop it (a real
-    // legacy store's crc matches its own file)
-    java.nio.file.Files.deleteIfExists(mdir.resolve(s".m${m.batchId}.json.crc"))
-    val read = UpsertSink.readManifest(path).get
-    assert(!read.hasLayout && read.buckets == m.buckets)
-    assert(snap(path) === Seq((1L, "a"))) // snapshot still readable
-    // the next apply is trusted once (nothing recorded to check) and
-    // writes the full contract back
-    assert(apply(path, Seq((1L, 2L, "U", "b")), 1))
-    val upgraded = UpsertSink.readManifest(path).get
-    assert(upgraded.hasLayout && upgraded.numBuckets == B &&
-      upgraded.key == "id" && upgraded.schemaDdl == "id BIGINT,v STRING")
-    assert(snap(path) === Seq((1L, "b")))
+    val txt = new String(java.nio.file.Files.readAllBytes(
+      mdir.resolve("m0.json")), "UTF-8")
+    val stripped = txt.replaceAll(
+      """"numBuckets":\d+,"key":"[^"]*","schema":"[^"]*",""", "")
+    assert(stripped != txt)
+    java.nio.file.Files.write(mdir.resolve("m0.json"), stripped.getBytes("UTF-8"))
+    // the NIO rewrite bypassed Hadoop's local-FS checksum sidecar
+    java.nio.file.Files.deleteIfExists(mdir.resolve(".m0.json.crc"))
+    def malformed(body: => Any): Unit = {
+      val e = intercept[RuntimeException](body)
+      assert(e.getMessage.contains("malformed manifest m0.json"), e.getMessage)
+    }
+    malformed(UpsertSink.readSnapshot(spark, path))
+    malformed(UpsertSink.readSnapshotKeys(spark, path, Seq(1L)))
+    malformed(apply(path, Seq((1L, 2L, "U", "b")), 1))
+  }
+
+  test("applyBatch rejects a NULL change key in its first job, before " +
+      "writing a delta or a manifest") {
+    val path = tmp()
+    assert(apply(path, Seq((1L, 1L, "I", "a")), 0))
+    val changes = Seq((java.lang.Long.valueOf(2L), 2L, "U", "b"),
+      (null.asInstanceOf[java.lang.Long], 2L, "U", "c"))
+      .toDF("id", "seq", "op", "v")
+    val e = intercept[Exception] {
+      UpsertSink.applyBatch(spark, path, "id", "seq", "op", Seq("v"), B)(
+        changes, 1)
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("applyBatch: NULL id")),
+      s"expected the applyBatch NULL-key failure, got: ${msgs(e).mkString(" | ")}")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "delta", "b1")))
+    assert(UpsertSink.readManifest(path).get.batchId == 0)
+    assert(snap(path) === Seq((1L, "a")))
   }
 
   test("vacuum drops fully-superseded deltas and old manifests, nothing live") {
@@ -211,13 +227,13 @@ class UpsertSinkSpec extends SparkTestBase {
 
     // fabricate the race window: an in-flight applyBatch for batch 2 has
     // already written its delta dir AND its manifest file, but has NOT
-    // yet swapped _CURRENT (which still points at m1.json)
+    // yet swapped the versioned pointer (which still names m1.json)
     val fakeDelta = java.nio.file.Paths.get(path, "delta", "b2", "__bucket=0")
     java.nio.file.Files.createDirectories(fakeDelta.getParent)
     Seq((1L, "inflight")).toDF("id", "v").write.parquet(fakeDelta.toString)
     val mdir = java.nio.file.Paths.get(path, "_manifest")
     java.nio.file.Files.write(mdir.resolve("m2.json"),
-      s"""{"batchId":2,"numBuckets":$B,"key":"id","schema":"id BIGINT,v STRING","buckets":{"0":"delta/b2"}}"""
+      s"""{"batchId":2,"numBuckets":$B,"key":"id","schema":"id BIGINT,v STRING","sortBy":[],"bloomKey":false,"buckets":{"0":"delta/b2"}}"""
         .getBytes("UTF-8"))
 
     val (dirs, manifests) = UpsertSink.vacuum(path)
@@ -253,7 +269,7 @@ class UpsertSinkSpec extends SparkTestBase {
     val m2 = UpsertSink.readManifest(path).get
     assert(m2.buckets.values.toSet.size > 1) // genuinely fragmented
 
-    // a reader that resolved _CURRENT BEFORE the compaction: its plan is
+    // a reader that resolved the pointer BEFORE the compaction: its plan is
     // bound to the old bucket dirs, which the swap must leave on disk
     val preReader = UpsertSink.readSnapshot(spark, path)
 
@@ -277,7 +293,7 @@ class UpsertSinkSpec extends SparkTestBase {
     assert(UpsertSink.compactSnapshot(spark, path) ===
       graft.operators.Layout.CompactStats(1, 0, 0L, 0L, 0L))
 
-    // Layout.compact routes a _CURRENT-managed tree here instead of the
+    // Layout.compact routes a manifest-managed tree here instead of the
     // in-place swap (which would double rows transiently)
     assert(graft.operators.Layout.compact(spark, path) ===
       graft.operators.Layout.CompactStats(1, 0, 0L, 0L, 0L))
@@ -321,7 +337,7 @@ class UpsertSinkSpec extends SparkTestBase {
     // must NOT be readable: uncommitted state stays invisible
     val mdir = java.nio.file.Paths.get(path, "_manifest")
     java.nio.file.Files.write(mdir.resolve("m9.json"),
-      s"""{"batchId":9,"numBuckets":$B,"key":"id","schema":"id BIGINT,v STRING","buckets":{"0":"delta/b9"}}"""
+      s"""{"batchId":9,"numBuckets":$B,"key":"id","schema":"id BIGINT,v STRING","sortBy":[],"bloomKey":false,"buckets":{"0":"delta/b9"}}"""
         .getBytes("UTF-8"))
     assert(at(99) === at(2))
     java.nio.file.Files.delete(mdir.resolve("m9.json"))
@@ -341,34 +357,6 @@ class UpsertSinkSpec extends SparkTestBase {
     val e = intercept[IllegalStateException] { at(1) }
     assert(e.getMessage.contains("vacuum"), e.getMessage)
     assert(at(2) === Seq((2L, "B2"), (3L, "c")))
-  }
-
-  test("a pre-upgrade store with only the legacy _CURRENT pointer opens, " +
-      "and the next apply upgrades it to versioned pointers") {
-    val path = tmp()
-    assert(apply(path, Seq((1L, 1L, "I", "a")), 0))
-    // convert to the legacy on-disk form: drop every versioned pointer,
-    // plant the single-file _CURRENT an old store would carry
-    val mdir = java.nio.file.Paths.get(path, "_manifest")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(mdir).iterator().asScala.toList
-      .filter(p => p.getFileName.toString.startsWith("_ptr.v") ||
-        p.getFileName.toString.startsWith("._ptr.v"))
-      .foreach(java.nio.file.Files.delete)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_CURRENT"),
-      "m0.json".getBytes("UTF-8"))
-    assert(UpsertSink.readManifest(path).get.batchId == 0)
-    assert(snap(path) === Seq((1L, "a")))
-    // the next apply writes a versioned pointer, which takes precedence
-    assert(apply(path, Seq((1L, 2L, "U", "b")), 1))
-    assert(snap(path) === Seq((1L, "b")))
-    assert(java.nio.file.Files.list(mdir).iterator().asScala
-      .exists(_.getFileName.toString.startsWith("_ptr.v")))
-    // vacuum drops the shadowed legacy file
-    UpsertSink.vacuum(path)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_CURRENT")))
-    assert(snap(path) === Seq((1L, "b")))
   }
 
   test("vacuum retention: retainVersions keeps the newest N versions " +
@@ -918,30 +906,6 @@ class UpsertSinkSpec extends SparkTestBase {
       UpsertSink.readSnapshotKeys(spark, path, Seq(1L).toDF("wrong"))
     }
     assert(err.getMessage.contains("no 'id' column"))
-  }
-
-  test("readSnapshotKeys refuses a legacy manifest with no recorded " +
-      "layout (nothing to route probes with)") {
-    val path = tmp()
-    assert(apply(path, Seq((1L, 1L, "I", "a")), 0))
-    // rewrite the manifest as a pre-contract store would have written it
-    val mdir = java.nio.file.Paths.get(path, "_manifest")
-    import scala.jdk.CollectionConverters._
-    val mfile = java.nio.file.Files.list(mdir).iterator().asScala.toList
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("m") && n.endsWith(".json")).head
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      mdir.resolve(mfile)), "UTF-8")
-    val legacy = txt.replaceAll(
-      """"numBuckets":\d+,"key":"[^"]*","schema":"[^"]*",""", "")
-    java.nio.file.Files.write(mdir.resolve(mfile), legacy.getBytes("UTF-8"))
-    // the NIO rewrite bypassed Hadoop's local-FS checksum sidecar
-    java.nio.file.Files.deleteIfExists(mdir.resolve(s".$mfile.crc"))
-    assert(!UpsertSink.readManifest(path).get.hasLayout)
-    val err = intercept[IllegalArgumentException] {
-      UpsertSink.readSnapshotKeys(spark, path, Seq(1L))
-    }
-    assert(err.getMessage.contains("legacy manifest"))
   }
 
   test("readChanges diffs only the buckets the intervening batches " +

@@ -1,6 +1,6 @@
 package graft.geo
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonGenerator, JsonParser, JsonToken}
 import org.locationtech.jts.geom._
 
 import java.io.StringWriter
@@ -16,21 +16,21 @@ import scala.collection.mutable.ArrayBuffer
   * for bare geometries.
   */
 object GeoJson {
-  private val jsonFactory = new JsonFactory()
-
   // ---------------------------------------------------------------- parse
 
   def parse(json: String): Geometry = {
-    val p = jsonFactory.createParser(json)
+    val p = graft.JsonText.factory.createParser(json)
     try {
       require(p.nextToken() == JsonToken.START_OBJECT, "GeoJSON must be an object")
-      val g = parseObject(p)
-      g
+      parseObject(p)
     } finally p.close()
   }
 
-  /** Parses one JSON object already positioned at START_OBJECT. */
-  private def parseObject(p: JsonParser): Geometry = {
+  /** Parses one JSON object already positioned at START_OBJECT and leaves
+    * the parser on its END_OBJECT — so a caller streaming a larger
+    * document (the GeoJSON source's features) builds the geometry from its
+    * own parser, without copying the subtree out as text first. */
+  private[graft] def parseObject(p: JsonParser): Geometry = {
     val f = GeomSerde.factory
     var typ: String = null
     var coords: Any = null          // nested ArrayBuffer tree of doubles
@@ -110,7 +110,7 @@ object GeoJson {
 
   def write(g: Geometry): String = {
     val sw = new StringWriter()
-    val gen = jsonFactory.createGenerator(sw)
+    val gen = graft.JsonText.factory.createGenerator(sw)
     writeGeom(gen, g)
     gen.close()
     sw.toString

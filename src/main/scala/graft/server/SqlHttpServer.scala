@@ -2,7 +2,8 @@ package graft.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.Graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.parser.ParseException
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -33,10 +34,20 @@ import java.nio.charset.StandardCharsets
   */
 object SqlHttpServer {
 
+  /** Starts the server on a pool of 4 daemon threads.
+    *
+    * Sets `sun.net.httpserver.nodelay=true` unless the caller has set the
+    * property. The JDK server writes the headers and the body of a
+    * response separately; with Nagle's algorithm on, the body waits for
+    * the client's delayed ACK, about 40 ms on loopback. The JDK reads the
+    * property once per JVM, when the first `HttpServer` is created, so
+    * the default only takes effect when this is the JVM's first
+    * `HttpServer`. */
   def start(spark: SparkSession, port: Int = 0, maxRows: Int = 1000,
             bindAddress: String = "127.0.0.1",
             authToken: Option[String] = None): HttpServer = {
     Graft.register(spark)
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
     val server = HttpServer.create(new InetSocketAddress(bindAddress, port), 0)
 
     server.createContext("/health", (ex: HttpExchange) =>
@@ -118,7 +129,7 @@ object SqlHttpServer {
         }
       } catch {
         case e: Throwable =>
-          respond(ex, 400, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
+          respond(ex, statusOf(e), s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
       }
     })
 
@@ -132,6 +143,17 @@ object SqlHttpServer {
     }))
     server.start()
     server
+  }
+
+  private[server] val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** A failed /query's status: 400 when the client must change the
+    * request (SQL that does not parse or resolve, a bad argument, an
+    * over-size body), 500 for a fault while executing it, such as a
+    * failed task. */
+  private[server] def statusOf(e: Throwable): Int = e match {
+    case _: ParseException | _: AnalysisException | _: IllegalArgumentException => 400
+    case _ => 500
   }
 
   /** Requests are refused at most 1 MB of SQL — far past any real query,

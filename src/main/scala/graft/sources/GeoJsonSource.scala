@@ -1,11 +1,13 @@
 package graft.sources
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import graft.geo.{GeoJson, GeomSerde}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.locationtech.jts.geom.Geometry
 
-import scala.collection.mutable.LinkedHashMap
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
 
 /** GeoJSON Feature/FeatureCollection document source — the reference's
   * MongoDB/CouchDB data model (reference: extension/json_extension.ts:100
@@ -19,27 +21,32 @@ import scala.collection.mutable.LinkedHashMap
 object GeoJsonSource {
 
   /** Flattens one Feature JSON object into (properties, geometry WKB). */
-  def flattenFeature(json: String): Seq[(Map[String, String], Option[Array[Byte]])] = {
-    val features = scala.collection.mutable.ArrayBuffer.empty[(Map[String, String], Option[Array[Byte]])]
-    val p = new JsonFactory().createParser(json)
+  def flattenFeature(json: String): Seq[(Map[String, String], Option[Array[Byte]])] =
+    parseFeatures(json).map { case (m, g) => (m.toMap, Option(g).map(GeomSerde.toWkb)) }.toSeq
+
+  /** The features of one document in a single pass over its text: the
+    * properties as strings, the geometry built in place from the same
+    * parser (null when a feature has none). The DSv2 scan tests its bbox
+    * and filters on this form, so WKB is encoded only for the features
+    * it keeps. */
+  private[graft] def parseFeatures(json: String): ArrayBuffer[(mutable.HashMap[String, String], Geometry)] = {
+    val out = ArrayBuffer.empty[(mutable.HashMap[String, String], Geometry)]
+    val p = graft.JsonText.factory.createParser(json)
     try {
       require(p.nextToken() == JsonToken.START_OBJECT, "GeoJSON must be an object")
-      parseObj(p, features)
+      parseObj(p, out)
     } finally p.close()
-    features.toSeq
+    out
   }
 
   private def parseObj(p: JsonParser,
-                       out: scala.collection.mutable.ArrayBuffer[(Map[String, String], Option[Array[Byte]])]): Unit = {
-    var typ: String = null
-    val props = LinkedHashMap.empty[String, String]
-    var geom: Option[Array[Byte]] = None
+                       out: ArrayBuffer[(mutable.HashMap[String, String], Geometry)]): Unit = {
+    val props = mutable.HashMap.empty[String, String]
+    var geom: Geometry = null
     var isCollection = false
 
     while (p.nextToken() != JsonToken.END_OBJECT) {
       p.currentName() match {
-        case "type" =>
-          p.nextToken(); typ = p.getText
         case "features" =>
           isCollection = true
           p.nextToken() // START_ARRAY
@@ -58,19 +65,12 @@ object GeoJsonSource {
           }
         case "geometry" =>
           p.nextToken()
-          if (p.currentToken() == JsonToken.START_OBJECT) {
-            // re-serialize the subtree and parse with the geometry codec
-            val sw = new java.io.StringWriter()
-            val gen = new JsonFactory().createGenerator(sw)
-            gen.copyCurrentStructure(p)
-            gen.close()
-            geom = Some(GeomSerde.toWkb(GeoJson.parse(sw.toString)))
-          }
+          if (p.currentToken() == JsonToken.START_OBJECT) geom = GeoJson.parseObject(p)
         case _ =>
           p.nextToken(); p.skipChildren()
       }
     }
-    if (!isCollection) out += ((props.toMap, geom))
+    if (!isCollection) out += ((props, geom))
   }
 
   /** Reads files of GeoJSON documents (one Feature or FeatureCollection per

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.sources._
 import org.apache.spark.unsafe.types.UTF8String
+import org.locationtech.jts.geom.Geometry
 
 /** Three-valued (SQL) evaluation of source filters against a flattened
   * string-column record map — shared by the graft-xml and graft-geojson
@@ -29,21 +30,26 @@ private[sources] object StringFilterEval {
     case _ => true
   }
 
-  /** Parses a `bbox` source option ("x0,y0,x1,y1") into an envelope-test
-    * predicate over the record's WKB geometry: keep when the geometry's
-    * envelope intersects the box (records without geometry are dropped —
+  /** Parses a `bbox` source option ("x0,y0,x1,y1") into an envelope test
+    * over a record's geometry: keep when the geometry's envelope
+    * intersects the box (records without geometry, `null`, are dropped —
     * spatial-selection semantics, mirroring the reference pushing
     * geo:within/intersects into its backend query). */
-  def bboxPredicate(spec: String): Option[Array[Byte]] => Boolean = {
+  def bboxTest(spec: String): Geometry => Boolean = {
     // sentinel written by SpatialFilterPushdown when the WHERE clause's
     // spatial constraints are provably unsatisfiable (disjoint envelopes)
     if (spec == "empty") return _ => false
     val parts = spec.split(",").map(_.trim.toDouble)
     require(parts.length == 4, s"bbox must be 'x0,y0,x1,y1', got: $spec")
     val env = new org.locationtech.jts.geom.Envelope(parts(0), parts(2), parts(1), parts(3))
-    wkb => wkb.exists { bytes =>
-      graft.geo.GeomSerde.fromWkb(bytes).getEnvelopeInternal.intersects(env)
-    }
+    g => g != null && g.getEnvelopeInternal.intersects(env)
+  }
+
+  /** [[bboxTest]] over a record's WKB geometry, for the scans whose
+    * records carry WKB already (graft-xml). */
+  def bboxPredicate(spec: String): Option[Array[Byte]] => Boolean = {
+    val keep = bboxTest(spec)
+    wkb => wkb.exists(bytes => keep(graft.geo.GeomSerde.fromWkb(bytes)))
   }
 
   private def isStr(v: Any): Boolean = v.isInstanceOf[String]

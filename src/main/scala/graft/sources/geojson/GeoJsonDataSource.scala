@@ -2,7 +2,9 @@ package graft.sources.geojson
 
 import graft.sources.{AggPushdown, DocFiles, GeoJsonSource, StringFilterEval}
 import org.apache.hadoop.fs.Path
+import graft.geo.GeomSerde
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -54,7 +56,7 @@ class GeoJsonDataSource extends TableProvider with DataSourceRegister {
               else graft.sources.mongo.CouchFind
                 .page(db, "{}", Nil, 0, DocFiles.HttpTimeoutMs)._1
             sample.foreach { json =>
-              GeoJsonSource.flattenFeature(json).foreach { case (m, _) => keys ++= m.keys }
+              GeoJsonSource.parseFeatures(json).foreach { case (m, _) => keys ++= m.keys }
             }
           }
         } else {
@@ -62,7 +64,7 @@ class GeoJsonDataSource extends TableProvider with DataSourceRegister {
           val sample = DocFiles.listFiles(DocFiles.pathsOf(options)).take(8) // bounded inference
           sample.foreach { f =>
             GeoJsonDataSource.documents(f, multiLine).foreach { json =>
-              GeoJsonSource.flattenFeature(json).foreach { case (m, _) => keys ++= m.keys }
+              GeoJsonSource.parseFeatures(json).foreach { case (m, _) => keys ++= m.keys }
             }
           }
         }
@@ -111,11 +113,11 @@ object GeoJsonDataSource {
       out.toString(java.nio.charset.StandardCharsets.UTF_8)
     } finally in.close()
     if (multiLine) {
-      // a whole-file document is ONE JSON value; flattenFeature parses the
+      // a whole-file document is ONE JSON value; parseFeatures reads the
       // first object and would silently IGNORE anything after it — so an
       // NDJSON export read back without multiLine=false must error loudly
       // instead of returning one row per file
-      val p = new com.fasterxml.jackson.core.JsonFactory().createParser(text)
+      val p = graft.JsonText.factory.createParser(text)
       try {
         p.nextToken()
         p.skipChildren()
@@ -125,7 +127,11 @@ object GeoJsonDataSource {
               """needs .option("multiLine", "false")""")
       } finally p.close()
       Iterator.single(text)
-    } else text.linesIterator.map(_.trim).filter(_.nonEmpty)
+    } else {
+      // java.lang.String.lines: the same terminators as Scala's
+      // linesIterator (\n, \r, \r\n) at half the cost per line
+      text.lines().iterator().asScala.map(_.trim).filter(_.nonEmpty)
+    }
   }
 }
 
@@ -433,9 +439,9 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
     // pushed + runtime (DPP) filters — the latter ride the partition
     val eff: Seq[Filter] = filters.toIndexedSeq ++ p.runtime
     new PartitionReader[InternalRow] {
-      private val geomIdx =
-        if (schema.fieldNames.contains("geometry")) schema.fieldIndex("geometry") else -1
-      private val bboxKeep = bbox.map(StringFilterEval.bboxPredicate)
+      private val names = schema.fieldNames
+      private val geomIdx = names.indexOf("geometry")
+      private val bboxKeep = bbox.map(StringFilterEval.bboxTest)
       private val serverAggMode = serverAggApplicable(file, eff)
       // kept for close(): a pushed LIMIT (or any early stop) leaves the
       // Mongo wire cursor mid-page — its socket must not outlive the task
@@ -470,12 +476,13 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
         else Iterator.single(InternalRow.fromSeq(counts.map(_ => 0L)))
       } else {
         val matching = source.flatMap { json =>
-          GeoJsonSource.flattenFeature(json).iterator.flatMap { case (m, g) =>
-            // pushed + runtime filters run on the FULL property map (they
-            // may reference columns pruned from the output schema) before
-            // any row is built
-            if (bboxKeep.forall(_(g)) && eff.forall(StringFilterEval.passes(_, m))) Some((m, g))
-            else None
+          GeoJsonSource.parseFeatures(json).iterator.collect {
+            // the bbox tests the parsed geometry's envelope; pushed +
+            // runtime filters run on the FULL property map (they may
+            // reference columns pruned from the output schema). WKB is
+            // encoded only for a kept feature whose output needs it
+            case (m, g) if bboxKeep.forall(_(g)) && eff.forall(StringFilterEval.passes(_, m)) =>
+              (m, if (geomIdx >= 0 && g != null) GeomSerde.toWkb(g) else null)
           }
         }
         // pushed LIMIT: per-partition truncation after the re-apply; the
@@ -490,11 +497,16 @@ private case class GeoJsonReaderFactory(schema: StructType, multiLine: Boolean,
         agg match {
           case Some((groups, specs)) =>
             AggPushdown.aggregate(records.map(_._1), groups, specs)
-          case None => records.map { case (m, g) =>
-            InternalRow.fromSeq(schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-              if (i == geomIdx) g.orNull
-              else m.get(f.name).map(UTF8String.fromString).orNull
-            })
+          case None => records.map { case (m, wkb) =>
+            val values = new Array[Any](names.length)
+            var i = 0
+            while (i < names.length) {
+              values(i) =
+                if (i == geomIdx) wkb
+                else m.get(names(i)).map(UTF8String.fromString).orNull
+              i += 1
+            }
+            new GenericInternalRow(values)
           }
         }
       }

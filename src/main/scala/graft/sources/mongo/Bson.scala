@@ -1,6 +1,5 @@
 package graft.sources.mongo
 
-import com.fasterxml.jackson.core.JsonFactory
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import java.io.{ByteArrayOutputStream, StringWriter}
@@ -132,7 +131,7 @@ object Bson {
   def toJson(buf: ByteBuffer): String = {
     buf.order(ByteOrder.LITTLE_ENDIAN)
     val sw = new StringWriter()
-    val gen = new JsonFactory().createGenerator(sw)
+    val gen = graft.JsonText.factory.createGenerator(sw)
     writeDoc(buf, gen, array = false)
     gen.close()
     sw.toString

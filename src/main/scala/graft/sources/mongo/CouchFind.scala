@@ -1,6 +1,6 @@
 package graft.sources.mongo
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import com.fasterxml.jackson.core.JsonToken
 
 /** CouchDB `_find` execution — the live half of the reference's CouchDB
   * integration (reference: extension/couchdb/couchdb_extension.ts:84
@@ -139,7 +139,7 @@ object CouchFind {
   private[mongo] def pageOf(responseJson: String): (Seq[String], Option[String]) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var bookmark: Option[String] = None
-    val f = new JsonFactory()
+    val f = graft.JsonText.factory
     val p = f.createParser(responseJson)
     try {
       require(p.nextToken() == JsonToken.START_OBJECT,

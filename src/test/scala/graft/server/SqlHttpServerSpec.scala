@@ -262,4 +262,59 @@ class SqlHttpServerSpec extends SparkTestBase {
     val bad = post("/query", "SELECT FROM nothing !!")
     assert(bad.statusCode() == 400 && bad.body().contains("\"error\""))
   }
+
+  // ------------------------------------------------ /query error statuses
+
+  test("SQL that does not parse answers 400") {
+    val r = post("/query", "SELEC 1")
+    assert(r.statusCode() == 400, r.body())
+    assert(r.body().contains("\"error\"") && r.body().contains("PARSE_SYNTAX_ERROR"), r.body())
+  }
+
+  test("SQL that does not resolve answers 400") {
+    val r = post("/query", "SELECT * FROM graft_no_such_table")
+    assert(r.statusCode() == 400, r.body())
+    assert(r.body().contains("TABLE_OR_VIEW_NOT_FOUND"), r.body())
+  }
+
+  test("an illegal argument answers 400") {
+    val r = post("/query", "SELECT * FROM graft_snapshot('/nonexistent', 'latest')")
+    assert(r.statusCode() == 400, r.body())
+    assert(r.body().contains("version must be an integer literal"), r.body())
+  }
+
+  test("a task that fails while executing answers 500") {
+    val r = post("/query",
+      "SELECT raise_error(concat('graft-boom-', CAST(id AS STRING))) AS x FROM range(1)")
+    assert(r.statusCode() == 500, r.body())
+    assert(r.body().contains("graft-boom-0"), r.body())
+  }
+
+  // ------------------------------------------------ TCP_NODELAY default
+
+  /** Runs `body` with the nodelay property set to `value` (None = unset)
+    * and restores whatever the JVM held before. */
+  private def withNoDelay(value: Option[String])(body: => Unit): Unit = {
+    val key = SqlHttpServer.NoDelayProperty
+    val saved = Option(System.getProperty(key))
+    value.fold(System.clearProperty(key))(System.setProperty(key, _))
+    try body
+    finally saved.fold(System.clearProperty(key))(System.setProperty(key, _))
+  }
+
+  test("start sets sun.net.httpserver.nodelay=true when the property is unset") {
+    withNoDelay(None) {
+      val s = SqlHttpServer.start(spark, port = 0)
+      try assert(System.getProperty(SqlHttpServer.NoDelayProperty) == "true")
+      finally s.stop(0)
+    }
+  }
+
+  test("start keeps a nodelay property the caller has set") {
+    withNoDelay(Some("false")) {
+      val s = SqlHttpServer.start(spark, port = 0)
+      try assert(System.getProperty(SqlHttpServer.NoDelayProperty) == "false")
+      finally s.stop(0)
+    }
+  }
 }

@@ -288,4 +288,108 @@ class GeoJsonSourceSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("Append") || e.toString.contains("Append"), e.toString)
   }
+
+  // ------------------------------------------------ one-pass feature parse
+
+  private val props =
+    """{"name":"alpha","pop":1200,"ratio":0.5,"ok":true,"none":null,"nested":{"a":1},"arr":[1,2]}"""
+  private val propMap =
+    Map("name" -> "alpha", "pop" -> "1200", "ratio" -> "0.5", "ok" -> "true", "none" -> null)
+
+  /** The codec's own answer for a geometry subtree given as text. */
+  private def wkbOf(geometry: String): Seq[Byte] =
+    GeomSerde.toWkb(graft.geo.GeoJson.parse(geometry)).toSeq
+
+  private def flat(json: String): Seq[(Map[String, String], Option[Seq[Byte]])] =
+    GeoJsonSource.flattenFeature(json).map { case (m, g) => (m, g.map(_.toSeq)) }
+
+  test("flattenFeature builds the same WKB in place as the codec does from the geometry text") {
+    val geometries = Seq(
+      """{"type":"Point","coordinates":[107.6,-6.9]}""",
+      """{"type":"Point","coordinates":[1.5,2.5,3.5]}""",
+      """{"type":"Point","coordinates":[3,4]}""",
+      """{"type":"LineString","coordinates":[[0,0],[1.5,1],[2,-3]]}""",
+      """{"type":"Polygon","coordinates":[[[0,0],[10,0],[10,10],[0,10],[0,0]],""" +
+        """[[2,2],[4,2],[4,4],[2,4],[2,2]]]}""",
+      """{"type":"MultiPoint","coordinates":[[1,2],[3.25,4]]}""",
+      """{"type":"MultiLineString","coordinates":[[[0,0],[1,1]],[[2,2],[3,3.5]]]}""",
+      """{"type":"MultiPolygon","coordinates":[[[[0,0],[1,0],[1,1],[0,0]]],""" +
+        """[[[5,5],[6,5],[6,6],[5,5]],[[5.2,5.1],[5.8,5.1],[5.8,5.7],[5.2,5.1]]]]}""",
+      """{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[1,2]},""" +
+        """{"type":"LineString","coordinates":[[0,0],[1,1]]}]}""")
+    for (g <- geometries) {
+      val doc = s"""{"type":"Feature","properties":$props,"geometry":$g}"""
+      assert(flat(doc) == Seq((propMap, Some(wkbOf(g)))), g)
+    }
+    // geometry before properties, and a null geometry
+    val point = geometries.head
+    assert(flat(s"""{"geometry":$point,"type":"Feature","properties":$props}""") ==
+      Seq((propMap, Some(wkbOf(point)))))
+    assert(flat(s"""{"type":"Feature","properties":$props,"geometry":null}""") ==
+      Seq((propMap, None)))
+    // a FeatureCollection: one entry per feature, in document order
+    val fcDoc = s"""{"type":"FeatureCollection","features":[""" +
+      s"""{"type":"Feature","properties":$props,"geometry":${geometries(4)}},""" +
+      s"""{"type":"Feature","properties":{"name":"b"},"geometry":${geometries(8)}}]}"""
+    assert(flat(fcDoc) == Seq((propMap, Some(wkbOf(geometries(4)))),
+      (Map("name" -> "b"), Some(wkbOf(geometries(8))))))
+  }
+
+  test("a scan with a bbox and a pushed filter returns the rows of the unpruned scan filtered after") {
+    val d = java.nio.file.Files.createTempDirectory("graft-gj-mixed").toFile
+    d.deleteOnExit()
+    java.nio.file.Files.writeString(new java.io.File(d, "mixed.jsonl").toPath,
+      Seq(
+        """{"type":"Feature","properties":{"name":"a-in"},"geometry":{"type":"Point","coordinates":[1,1]}}""",
+        """{"type":"Feature","properties":{"name":"a-out"},"geometry":{"type":"Point","coordinates":[50,50]}}""",
+        """{"type":"Feature","properties":{"name":"b-in"},"geometry":{"type":"Point","coordinates":[2,2]}}""",
+        """{"type":"Feature","properties":{"name":"a-poly"},"geometry":{"type":"Polygon",""" +
+          """"coordinates":[[[-10,-10],[0.5,-10],[0.5,0.5],[-10,0.5],[-10,-10]]]}}""",
+        """{"type":"Feature","properties":{"name":"a-line"},"geometry":{"type":"LineString",""" +
+          """"coordinates":[[4,-20],[4,-10]]}}""",
+        """{"type":"Feature","properties":{"name":"a-null"},"geometry":null}""",
+        """{"type":"Feature","properties":{},"geometry":{"type":"Point","coordinates":[1,2]}}""",
+        """{"type":"FeatureCollection","features":[""" +
+          """{"type":"Feature","properties":{"name":"a-fc1"},"geometry":{"type":"MultiPoint","coordinates":[[40,40],[3,3]]}},""" +
+          """{"type":"Feature","properties":{"name":"a-fc2"},"geometry":{"type":"Point","coordinates":[9,9]}}]}"""
+      ).mkString("\n"))
+    val (x0, y0, x1, y1) = (0.0, 0.0, 5.0, 5.0)
+    def reader = spark.read.format("graft-geojson").option("multiLine", "false")
+      .option("columns", "name")
+    val pruned = reader.option("bbox", s"$x0,$y0,$x1,$y1").load(d.getAbsolutePath)
+      .where($"name".startsWith("a"))
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert(plan.contains("StringStartsWith(name,a)") && plan.contains("bbox: ["), plan)
+    val box = new org.locationtech.jts.geom.Envelope(x0, x1, y0, y1)
+    val expected = reader.load(d.getAbsolutePath).collect().filter { r =>
+      val name = r.getString(0)
+      val g = Option(r.getAs[Array[Byte]]("geometry")).map(GeomSerde.fromWkb)
+      name != null && name.startsWith("a") && g.exists(_.getEnvelopeInternal.intersects(box))
+    }.map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq)).sortBy(_._1).toSeq
+    assert(expected.map(_._1) == Seq("a-fc1", "a-in", "a-poly"))
+    val got = pruned.collect().map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq))
+      .sortBy(_._1).toSeq
+    assert(got == expected)
+    // without the geometry column in the output, the same names survive
+    assert(pruned.select("name").collect().map(_.getString(0)).sorted.toSeq ==
+      expected.map(_._1))
+  }
+
+  test("a malformed geometry still fails the scan with the codec's message") {
+    for ((geometry, message) <- Seq(
+        """{"type":"Blob","coordinates":[1,2]}""" -> "unsupported GeoJSON type: Blob",
+        """{"type":"Point","coordinates":["1",2]}""" -> "unexpected token in coordinates")) {
+      val d = java.nio.file.Files.createTempDirectory("graft-gj-bad").toFile
+      d.deleteOnExit()
+      java.nio.file.Files.writeString(new java.io.File(d, "bad.jsonl").toPath,
+        s"""{"type":"Feature","properties":{"name":"x"},"geometry":$geometry}""")
+      val e = intercept[Exception] {
+        spark.read.format("graft-geojson").option("multiLine", "false")
+          .option("columns", "name").load(d.getAbsolutePath).collect()
+      }
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains(message)), messages.mkString(" | "))
+    }
+  }
 }
